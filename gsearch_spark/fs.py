@@ -89,6 +89,9 @@ class CheckpointFS:
         return bool(self._fs.exists(self._p(path)))
 
     def mkdirs(self, path: str) -> bool:
+        """Create ``path`` and its parents.  Raises when ``path`` exists
+        as a file, as the JVM backends do (Hadoop ``mkdirs`` contract:
+        FileAlreadyExistsException)."""
         if self._local:
             os.makedirs(_strip_scheme(path), exist_ok=True)
             return True
@@ -161,13 +164,18 @@ class CheckpointFS:
 
     def list_children(self, path: str) -> "list[str]":
         """Immediate children (files and dirs) of a directory, as full
-        path strings.  Used by the add commit to enumerate staged hive
-        partition dirs (``kb=…`` / ``ib=…``)."""
+        path strings, hidden (dot-prefixed) names skipped as in
+        :meth:`move_children` — the JVM local listing hides ``.crc``
+        sidecars, so every backend hides them all.  Used by the add
+        commit to enumerate staged hive partition dirs (``kb=…`` /
+        ``ib=…``)."""
         if self._local:
             p = _strip_scheme(path)
-            return [os.path.join(p, name) for name in sorted(os.listdir(p))]
+            return [os.path.join(p, name) for name in sorted(os.listdir(p))
+                    if not name.startswith(".")]
         return [str(st.getPath().toString())
-                for st in self._fs.listStatus(self._p(path))]
+                for st in self._fs.listStatus(self._p(path))
+                if not st.getPath().getName().startswith(".")]
 
     def create_atomic(self, path: str, text: str) -> bool:
         """Create ``path`` with ``text`` ONLY if it does not already

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from gsearch_spark.config import PipelineConfig
+
 
 def _large_star(e: DataFrame) -> DataFrame:
     bidir = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -105,12 +107,12 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
 def union_find(edge_list: "list[tuple[str, str]]") -> "dict[str, str]":
     """Driver-local CC: node -> min member of its component.
 
-    The small-graph fast path for the append path's CONTRACTED label
-    graph (operators/pipeline.py::incremental_add): after contraction
-    the edge count is O(new verified edges) — thousands per daily
-    append even at a 10^12-row corpus — and the distributed star
-    algorithm's per-iteration job latency (~0.5 s x O(log^2 n) rounds)
-    dwarfs the actual work.  Classic union-find with path compression +
+    The small-graph side of :func:`components`, e.g. for the append
+    path's CONTRACTED label graph: after contraction the edge count is
+    O(new verified edges) — thousands per daily append even at a
+    10^12-row corpus — and the distributed star algorithm's
+    per-iteration job latency (~0.5 s x O(log^2 n) rounds) dwarfs the
+    actual work.  Classic union-find with path compression +
     union by size, then each component labelled by its lexicographic
     minimum member (the same normalization contract as the distributed
     path, so the two are interchangeable — asserted by the add-parity
@@ -146,11 +148,40 @@ def union_find(edge_list: "list[tuple[str, str]]") -> "dict[str, str]":
     return {n: comp_min[find(n)] for n in parent}
 
 
+def components(edges: DataFrame, n_edges: int, cfg: PipelineConfig,
+               checkpoint_dir: "str | None" = None) -> DataFrame:
+    """edges(a, b) -> (image_id, cluster_id), deciding WHERE CC runs.
+
+    The one driver-vs-distributed gate of the build, add and remove
+    paths.  At most ``cfg.add_cc_local_max_edges`` edges (``n_edges``,
+    a count the caller already holds) are collected into driver
+    :func:`union_find` — the star rounds' per-job latency dwarfs the
+    work there; above it the distributed star algorithm runs.  Both
+    sides give identical min-member labels.  A ``checkpoint_dir``
+    (reliable per-iteration lineage cuts) always takes the distributed
+    side: its point is surviving executor loss.  Either way the result
+    is materialized — a driver-built relation, or a cut."""
+    if checkpoint_dir is None and n_edges <= cfg.add_cc_local_max_edges:
+        mapping = union_find([(r["a"], r["b"]) for r in
+                              edges.select("a", "b").collect()])
+        return edges.sparkSession.createDataFrame(
+            sorted(mapping.items()),
+            schema="image_id string, cluster_id string")
+    comp = connected_components(edges, checkpoint_dir=checkpoint_dir)
+    return comp if checkpoint_dir is not None else comp.localCheckpoint()
+
+
+def label_nodes(comp: DataFrame, images: DataFrame) -> DataFrame:
+    """Every image gets a cluster_id: its component's, or its own id
+    when it has no edge (a singleton)."""
+    return (images.select("image_id").join(comp, "image_id", "left")
+            .select("image_id",
+                    F.coalesce("cluster_id", "image_id").alias("cluster_id")))
+
+
 def assign_clusters(edges: DataFrame, images: DataFrame,
                     checkpoint_dir: "str | None" = None) -> DataFrame:
     """Full assignment incl. singletons: every image gets a cluster_id."""
-    comp = connected_components(edges, checkpoint_dir=checkpoint_dir)
-    ids = images.select("image_id")
-    return (ids.join(comp, "image_id", "left")
-            .select("image_id",
-                    F.coalesce("cluster_id", "image_id").alias("cluster_id")))
+    return label_nodes(connected_components(edges,
+                                            checkpoint_dir=checkpoint_dir),
+                       images)

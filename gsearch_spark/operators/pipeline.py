@@ -32,8 +32,7 @@ from gsearch_spark.config import PipelineConfig
 from gsearch_spark.fs import CheckpointFS
 from gsearch_spark.operators.banding import build_bands
 from gsearch_spark.operators.candidates import bucket_stats, emit_bucket_pairs
-from gsearch_spark.operators.cc import (assign_clusters,
-                                        connected_components, union_find)
+from gsearch_spark.operators.cc import components, label_nodes
 from gsearch_spark.operators.exact import (exact_groups, expand_clusters,
                                            representatives)
 from gsearch_spark.operators.signatures import compute_signatures
@@ -60,36 +59,22 @@ class ConcurrentAddError(RuntimeError):
     """Another writer holds the build's mutation lock."""
 
 
-_TRACE_T0 = time.time()
-
-
-def _trace(msg: str) -> None:
-    """Mutation-path step tracing (no-op unless GSEARCH_TRACE_MUTATIONS
-    is set): prints wall-clock offsets of the concurrent add/remove
-    chains so a profiler can attribute time between stage records."""
-    if os.environ.get("GSEARCH_TRACE_MUTATIONS"):
-        print(f"[trace {time.time() - _TRACE_T0:9.2f}] {msg}",
-              flush=True)
-
-
-def _run_parallel(*thunks):
+def _run_parallel(spark: SparkSession, *thunks):
     """Run independent Spark job chains concurrently (guide §2.6,
     overlap independent jobs): the mutation paths are long sequences of
     SMALL jobs whose per-job latency — not data volume — dominates at
     append/remove sizes, and independent chains (new-vs-new bands,
     new-vs-old probe, suffix pass; the three sidecar staging writes)
     back-fill each other's task tails instead of serializing.  Results
-    return in call order; the first exception is re-raised.  Threads
-    use pyspark's inheritable_thread_target so job-group/description
-    properties propagate."""
+    return in call order once ALL have finished; the first exception is
+    re-raised.  Threads use pyspark's inheritable_thread_target with
+    the session, so job-group/description properties and tags
+    propagate."""
     if len(thunks) == 1:
         return [thunks[0]()]
     from concurrent.futures import ThreadPoolExecutor
     from pyspark import inheritable_thread_target
-    from pyspark.sql import SparkSession
-    session = SparkSession.getActiveSession()
-    wrap = (inheritable_thread_target(session) if session is not None
-            else inheritable_thread_target)
+    wrap = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futs = [pool.submit(wrap(t)) for t in thunks]
         return [f.result() for f in futs]
@@ -111,26 +96,6 @@ def _fanout(fn, items, workers: int = 16):
         futs = [pool.submit(fn, it) for it in items]
         for f in futs:
             f.result()
-
-
-def _spawn(thunk):
-    """Start ONE job chain on a side thread and return its Future —
-    the overlap primitive behind :func:`_run_parallel` when the caller
-    needs to keep doing its own Spark work on the main thread while the
-    side chain runs (e.g. the build's suffix pass overlapping the
-    decode-bound signatures stage).  The caller must ``.result()`` the
-    future (which re-raises any exception) before depending on its
-    output; the single-thread pool shuts down with the future."""
-    from concurrent.futures import ThreadPoolExecutor
-    from pyspark import inheritable_thread_target
-    from pyspark.sql import SparkSession
-    session = SparkSession.getActiveSession()
-    wrap = (inheritable_thread_target(session) if session is not None
-            else inheritable_thread_target)
-    pool = ThreadPoolExecutor(max_workers=1)
-    fut = pool.submit(wrap(thunk))
-    pool.shutdown(wait=False)
-    return fut
 
 
 def _pid_alive(pid: int) -> bool:
@@ -205,8 +170,7 @@ def cluster_pbucket(cfg: PipelineConfig) -> "F.Column":
     cluster's rows live in.  Pure function of cluster_id so an
     incremental add can prune reads AND rewrites to touched partitions
     (the Iceberg bucket-transform analog for the output table)."""
-    return F.pmod(F.xxhash64("cluster_id"),
-                  F.lit(cfg.cluster_buckets)).cast("int")
+    return _pb(cfg, "cluster_id")
 
 
 @dataclass
@@ -240,6 +204,7 @@ class NearDupPipeline:
         # (guide §2.6); the record buffers are the only shared state
         import threading
         self._rec_lock = threading.Lock()
+        self._side: list = []  # futures of every side chain started
 
     # ------------------------------------------------------------ plumbing
 
@@ -249,24 +214,50 @@ class NearDupPipeline:
     def _done(self, stage: str) -> bool:
         return self.fs.exists(os.path.join(self._path(stage), "_SUCCESS"))
 
-    def _write_stage(self, stage: str, df: DataFrame) -> DataFrame:
-        path = self._path(stage)
-        df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
+    def _spawn(self, thunk):
+        """Start ONE job chain on a side thread and return its Future —
+        the overlap primitive behind :func:`_run_parallel` when the caller
+        needs to keep doing its own Spark work on the main thread while the
+        side chain runs (e.g. the build's suffix pass overlapping the
+        decode-bound signatures stage).  The caller must ``.result()`` the
+        future (which re-raises any exception) before depending on its
+        output; :meth:`_join_side` waits for it when the call ends."""
+        from concurrent.futures import ThreadPoolExecutor
+        from pyspark import inheritable_thread_target
+        pool = ThreadPoolExecutor(max_workers=1)
+        fut = pool.submit(inheritable_thread_target(self.spark)(thunk))
+        pool.shutdown(wait=False)
+        self._side.append(fut)
+        return fut
+
+    def _join_side(self) -> None:
+        """Wait for, then drop, every side chain started so far.  Runs
+        as a build/add/remove call ends, so on a failure no side job
+        outlives the call (a retry would otherwise race a live sidecar
+        overwrite, or jobs would run past the writer lock's release).
+        A side chain's own error is dropped here: on success the caller
+        already read it, on failure the main chain's error propagates."""
+        for fut in self._side:
+            try:
+                fut.result()
+            except Exception:
+                pass
+        self._side.clear()
 
     def _record(self, stage: str, out: DataFrame, t0: float,
-                skipped: bool) -> DataFrame:
+                skipped: bool, rows_in: int = -1) -> int:
         """ONE job per stage: the per-partition row counts are collected
         (their sum IS the stage row count — no separate count() job) and
         buffered as pipeline_state rows for a single flush at the end
         (FIXTURES.md §4 contract: stage, part_id, rows_in, rows_out,
         t_start, t_end, config_hash — the processing_state.json analog,
-        per partition; the collect is bounded by the partition count)."""
+        per partition; the collect is bounded by the partition count).
+        ``rows_in`` is the row count of the stage's input, from the
+        caller.  Returns the stage's row count."""
         parts = (out.groupBy(F.spark_partition_id().alias("part_id"))
                  .agg(F.count(F.lit(1)).alias("rows_out")).collect())
         n = sum(p["rows_out"] for p in parts)
         with self._rec_lock:
-            rows_in = self.records[-1].rows_out if self.records else -1
             rec = StageRecord(stage, n, time.time() - t0, skipped,
                               rows_in=rows_in, t_start=t0,
                               t_end=time.time())
@@ -281,7 +272,7 @@ class NearDupPipeline:
                 (stage, int(p["part_id"]), rows_in, int(p["rows_out"]),
                  rec.t_start, rec.t_end, rec.seconds, skipped,
                  self.cfg.config_hash()) for p in parts)
-        return out
+        return n
 
     def _flush_state(self) -> None:
         if not self._state_buf:
@@ -299,9 +290,29 @@ class NearDupPipeline:
              os.path.join(self.dir, "pipeline_state")))
         self._state_buf.clear()
 
+    def _stage(self, stage: str, write, resume: bool, rows_in: int = -1,
+               read=None) -> "tuple[DataFrame, int]":
+        """Resume-or-compute ONE checkpointed stage: unless ``resume``
+        finds its checkpoint, ``write(path)`` writes it; either way it is
+        read back (``read(path)``, plain Parquet by default) and
+        recorded.  Returns the stage table and its row count."""
+        t0 = time.time()
+        path = self._path(stage)
+        skipped = resume and self._done(stage)
+        if not skipped:
+            write(path)
+        df = read(path) if read else self.spark.read.parquet(path)
+        return df, self._record(stage, df, t0, skipped, rows_in)
+
     # ------------------------------------------------------------ stages
 
     def run(self, images: DataFrame, resume: bool = True) -> DataFrame:
+        try:
+            return self._run(images, resume)
+        finally:
+            self._join_side()
+
+    def _run(self, images: DataFrame, resume: bool) -> DataFrame:
         self.fs.mkdirs(self.dir)
         params = os.path.join(self.dir, "parameters.json")
         if self.fs.exists(params):
@@ -312,16 +323,15 @@ class NearDupPipeline:
 
         n_images = images.count()
 
+        def parquet(make):
+            return lambda path: make().write.mode("overwrite").parquet(path)
+
         # -- stage 0: exact-duplicate collapse (identity short-circuit,
         #    gsearch src/bin/bindash.rs:139-153) ---------------------------
-        t0 = time.time()
-        if resume and self._done("exact_groups"):
-            groups = self.spark.read.parquet(self._path("exact_groups"))
-            groups = self._record("exact_groups", groups, t0, skipped=True)
-        else:
-            groups = self._write_stage("exact_groups", exact_groups(images))
-            groups = self._record("exact_groups", groups, t0, skipped=False)
-        if self.records[-1].rows_out != n_images:
+        groups, n_groups = self._stage(
+            "exact_groups", parquet(lambda: exact_groups(images)), resume,
+            n_images)
+        if n_groups != n_images:
             raise RuntimeError("exact_groups row count != image count")
         images_rep = representatives(images, groups)
         # rep count from the (keys-only, checkpointed) groups table — the
@@ -331,7 +341,7 @@ class NearDupPipeline:
         # Only the sent==received check AFTER signatures consumes it, so
         # the count job runs on a side thread under the decode-bound
         # signatures stage (guide §2.6) instead of on the critical path
-        nreps_future = _spawn(
+        nreps_future = self._spawn(
             lambda: groups.filter(F.col("image_id") == F.col("rep_id"))
             .count())
 
@@ -342,7 +352,7 @@ class NearDupPipeline:
         # Only started when candidate_pairs will actually be computed.
         sfx_future = None
         if not (resume and self._done("candidate_pairs")):
-            sfx_future = _spawn(
+            sfx_future = self._spawn(
                 lambda: suffix_candidate_pairs(images_rep).localCheckpoint())
 
         from gsearch_spark.operators.keyidx import (read_edge_index,
@@ -351,20 +361,11 @@ class NearDupPipeline:
                                                     write_id_index)
 
         # -- stage 1: signatures (representatives only) --------------------
-        t0 = time.time()
-        if resume and self._done("signatures"):
-            sigs = self.spark.read.parquet(self._path("signatures"))
-            sigs = self._record("signatures", sigs, t0, skipped=True)
-        else:
-            sigs = self._write_stage("signatures",
-                                     compute_signatures(images_rep,
-                                                        self.cfg))
-            sigs = self._record("signatures", sigs, t0, skipped=False)
+        sigs, n_sigs = self._stage(
+            "signatures",
+            parquet(lambda: compute_signatures(images_rep, self.cfg)),
+            resume, n_groups)
         # sent == received invariant (gsearch src/dna/dnasketch.rs:458-464)
-        # (by-name lookup: the concurrently-recording ck_index thread may
-        # interleave records, so records[-1] is no longer this stage's)
-        n_sigs = next(r.rows_out for r in reversed(self.records)
-                      if r.stage == "signatures")
         n_reps = nreps_future.result()
         if n_sigs != n_reps:
             raise RuntimeError(
@@ -372,29 +373,23 @@ class NearDupPipeline:
                 f"{n_reps} (sent/received reconciliation failed)")
 
         # -- stage 2: bands ------------------------------------------------
-        t0 = time.time()
-        if resume and self._done("bands"):
-            bands = self.spark.read.parquet(self._path("bands"))
-            bands = self._record("bands", bands, t0, skipped=True)
-        else:
-            bands = self._write_stage("bands", build_bands(sigs, self.cfg))
-            bands = self._record("bands", bands, t0, skipped=False)
+        bands, n_bands = self._stage(
+            "bands", parquet(lambda: build_bands(sigs, self.cfg)), resume,
+            n_sigs)
 
         # -- stage 3: candidate pairs (LSH buckets ∪ suffix pass) ----------
-        stats_future = None
-        t0 = time.time()
-        if resume and self._done("candidate_pairs"):
-            pairs = self.spark.read.parquet(self._path("candidate_pairs"))
-            pairs = self._record("candidate_pairs", pairs, t0, skipped=True)
-        else:
+        def _pairs():
             lsh_pairs = emit_bucket_pairs(bands)
             sfx_pairs = sfx_future.result()  # overlapped since stage 1
             # min(src) dedup => deterministic winner per pair
-            pairs = (lsh_pairs.unionByName(sfx_pairs)
-                     .groupBy("a", "b")
-                     .agg(F.min("src").alias("src")))
-            pairs = self._write_stage("candidate_pairs", pairs)
-            pairs = self._record("candidate_pairs", pairs, t0, skipped=False)
+            return (lsh_pairs.unionByName(sfx_pairs)
+                    .groupBy("a", "b")
+                    .agg(F.min("src").alias("src")))
+
+        pairs, n_pairs = self._stage("candidate_pairs", parquet(_pairs),
+                                     resume, n_bands)
+        stats_future = None
+        if sfx_future is not None:
             # no silent caps: surface bucket policy stats in the log.
             # The stats aggregation is observability-only (nothing
             # downstream reads it), so it runs on a side thread under
@@ -405,23 +400,16 @@ class NearDupPipeline:
                     os.path.join(self.dir, "bucket_stats.json"),
                     json.dumps({k: (float(v) if v is not None else None)
                                 for k, v in stats.items()}))
-            stats_future = _spawn(_stats)
+            stats_future = self._spawn(_stats)
 
         # -- stage 4: verified edges --------------------------------------
-        t0 = time.time()
-        if resume and self._done("verified_edges"):
-            edges = self.spark.read.parquet(self._path("verified_edges"))
-            edges = self._record("verified_edges", edges, t0, skipped=True)
-        else:
-            # the candidate_pairs stage record bounds the pair count, so
-            # the attach strategy resolves WITHOUT the auto id-count job
-            n_pairs = next(r.rows_out for r in reversed(self.records)
-                           if r.stage == "candidate_pairs")
-            edges = self._write_stage("verified_edges",
-                                      verified_edges(pairs, images_rep,
-                                                     self.cfg,
-                                                     n_pairs_hint=n_pairs))
-            edges = self._record("verified_edges", edges, t0, skipped=False)
+        # the candidate_pairs stage record bounds the pair count, so the
+        # attach strategy resolves WITHOUT the auto id-count job
+        edges, n_edges = self._stage(
+            "verified_edges",
+            parquet(lambda: verified_edges(pairs, images_rep, self.cfg,
+                                           n_pairs_hint=n_pairs)),
+            resume, n_pairs)
 
         # ck_index depends only on the stage-0 exact_groups checkpoint and
         # edge_index only on the verified_edges checkpoint just written —
@@ -431,80 +419,35 @@ class NearDupPipeline:
         # signatures stage — was measured WORSE per-stage: all 32 task
         # slots are busy there, so the sidecar job just queued and its
         # recorded wall inflated 1.6 s → 3.7 s.)
-        def _w_ck():
-            t0 = time.time()
-            if resume and self._done("ck_index"):
-                df = self.spark.read.parquet(self._path("ck_index"))
-                self._record("ck_index", df, t0, skipped=True)
-            else:
-                write_ck_index(groups, self._path("ck_index"), self.cfg)
-                df = self.spark.read.parquet(self._path("ck_index"))
-                self._record("ck_index", df, t0, skipped=False)
+        ck_future = self._spawn(lambda: self._stage(
+            "ck_index", lambda p: write_ck_index(groups, p, self.cfg),
+            resume, n_groups))
+        edge_future = self._spawn(lambda: self._stage(
+            "edge_index", lambda p: write_edge_index(edges, p, self.cfg),
+            resume, n_edges,
+            read=lambda p: read_edge_index(self.spark, p)))
 
-        def _w_edge():
-            t0 = time.time()
-            if resume and self._done("edge_index"):
-                df = read_edge_index(self.spark, self._path("edge_index"))
-                self._record("edge_index", df, t0, skipped=True)
-            else:
-                write_edge_index(edges, self._path("edge_index"), self.cfg)
-                df = read_edge_index(self.spark, self._path("edge_index"))
-                self._record("edge_index", df, t0, skipped=False)
-
-        ck_future = _spawn(_w_ck)
-        edge_future = _spawn(_w_edge)
-
-        # -- stage 5: clusters (small-star / large-star CC over reps,
-        #    then expand exact-group members onto their rep's cluster).
+        # -- stage 5: clusters (CC over reps — driver union-find or
+        #    distributed star rounds, decided by cc.components — then
+        #    expand exact-group members onto their rep's cluster).
         #    Written hive-partitioned on pbucket(cluster_id) so the
         #    append path can prune its partition-level rewrite ---------
-        t0 = time.time()
-        if resume and self._done("clusters"):
-            clusters = self.spark.read.parquet(self._path("clusters"))
-            clusters = self._record("clusters", clusters, t0, skipped=True)
-        else:
-            # small-graph fast path (same contract as the append path's
-            # contraction CC): below cfg.add_cc_local_max_edges the
-            # O(log^2 n) distributed star rounds are pure per-job
-            # latency — driver union-find produces IDENTICAL min-member
-            # labels (pinned by the parity/invariance tests).  The edge
-            # count is already known from the verified_edges record (no
-            # extra job); the reliable-checkpoint mode keeps the
-            # distributed path (its point is surviving executor loss).
-            # By-name lookup: the ck/edge sidecar threads record
-            # concurrently, so records[-1] may not be verified_edges.
-            n_edges = next(r.rows_out for r in reversed(self.records)
-                           if r.stage == "verified_edges")
-            if (not self.cfg.cc_reliable_checkpoints
-                    and n_edges <= self.cfg.add_cc_local_max_edges):
-                mapping = union_find([(r["a"], r["b"]) for r in
-                                      edges.select("a", "b").collect()])
-                comp = self.spark.createDataFrame(
-                    sorted(mapping.items()),
-                    schema="image_id string, cluster_id string")
-                ids = images_rep.select("image_id")
-                rep_clusters = (ids.join(F.broadcast(comp), "image_id",
-                                         "left")
-                                .select("image_id",
-                                        F.coalesce("cluster_id",
-                                                   "image_id")
-                                        .alias("cluster_id")))
-            else:
-                cc_dir = (os.path.join(self.dir, "cc_work")
-                          if self.cfg.cc_reliable_checkpoints else None)
-                rep_clusters = assign_clusters(edges, images_rep,
-                                               checkpoint_dir=cc_dir)
-            path = self._path("clusters")
+        def _clusters(path):
+            cc_dir = (os.path.join(self.dir, "cc_work")
+                      if self.cfg.cc_reliable_checkpoints else None)
+            comp = components(edges, n_edges, self.cfg,
+                              checkpoint_dir=cc_dir)
             # repartition ON the partition column first: without it every
             # task writes a file into every pbucket dir (tasks x buckets
             # small files — measured 3x stage cost at 213k rows); with it
             # each bucket is one task writing one file
-            (expand_clusters(rep_clusters, groups)
+            (expand_clusters(label_nodes(comp, images_rep), groups)
              .withColumn("pbucket", cluster_pbucket(self.cfg))
              .repartition(self.cfg.cluster_buckets, F.col("pbucket"))
              .write.mode("overwrite").partitionBy("pbucket").parquet(path))
-            clusters = self.spark.read.parquet(path)
-            clusters = self._record("clusters", clusters, t0, skipped=False)
+
+        clusters, n_clusters = self._stage("clusters", _clusters, resume,
+                                           n_edges)
 
         # -- stage 6: key-addressed lookup layouts (operators/keyidx.py).
         #    Sidecar tables whose partitioning + in-file sort make the
@@ -512,21 +455,12 @@ class NearDupPipeline:
         #    O(probed keys) IO instead of scanning corpus-sized key
         #    columns (reference: add addresses its persisted index by
         #    rank, never rescans it — src/dna/dnasketch.rs:106-134).
-        #    ck_index has been writing since stage 0 and edge_index since
-        #    the verify stage (side threads, guide §2.6) — only the
+        #    ck_index and edge_index have been writing on side threads
+        #    since the verify stage (guide §2.6) — only the
         #    clusters-dependent id_index remains on the critical path.
-        def _w_id():
-            t0 = time.time()
-            if resume and self._done("id_index"):
-                df = self.spark.read.parquet(self._path("id_index"))
-                self._record("id_index", df, t0, skipped=True)
-            else:
-                write_id_index(clusters, groups, self._path("id_index"),
-                               self.cfg)
-                df = self.spark.read.parquet(self._path("id_index"))
-                self._record("id_index", df, t0, skipped=False)
-
-        _w_id()
+        self._stage("id_index",
+                    lambda p: write_id_index(clusters, groups, p, self.cfg),
+                    resume, n_clusters)
         ck_future.result()
         edge_future.result()
         if stats_future is not None:
@@ -633,6 +567,7 @@ def incremental_add(spark: SparkSession, cfg: PipelineConfig,
         return _incremental_add_locked(spark, cfg, checkpoint_dir,
                                        new_images, all_images, pipe)
     finally:
+        pipe._join_side()  # no side job may outlive the lock
         if lock_owner:
             release_add_lock(pipe.fs, checkpoint_dir)
 
@@ -701,6 +636,7 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
 
     (old_groups, old_bands, clusters_stored, ck_idx_df, id_idx_df,
      (removals, dead_df, remap_df), new_images) = _run_parallel(
+        spark,
         lambda: spark.read.parquet(pipe._path("exact_groups")),
         lambda: spark.read.parquet(pipe._path("bands")),
         lambda: spark.read.parquet(pipe._path("clusters")),
@@ -737,9 +673,7 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
         clash = lookup_id_index(spark, id_path,
                                 new_images.select("image_id"), cfg,
                                 idx_df=id_idx_df)
-        pipe._record("add_lookup_idclash", clash, t0, skipped=False)
-        return next(r for r in pipe.records
-                    if r.stage == "add_lookup_idclash").rows_out
+        return pipe._record("add_lookup_idclash", clash, t0, skipped=False)
 
     def _mk_old_keys():
         # content keys of the new slice, then the ck-membership probe —
@@ -772,10 +706,8 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
         # phash-sorted / z-ordered Iceberg table this turns the per-add
         # suffix input read into O(touched groups) IO); bulk appends
         # past the cap fall back to the semi join.
-        _trace("touched: start")
         ph_vals = [r[0] for r in new_images.select("phash").distinct()
                    .limit(10_001).collect()]
-        _trace("touched: ph_vals collected")
         if len(ph_vals) <= 10_000:
             touched_imgs = all_images.filter(F.col("phash").isin(ph_vals))
         else:
@@ -788,7 +720,6 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
         touched_imgs = (touched_imgs.select("phash", "image_id",
                                             "caption")
                         .localCheckpoint())
-        _trace("touched: touched_imgs cut")
         # rep-ness of the touched slice comes from a pruned id_index
         # point lookup (is_rep flag), not a corpus scan of the stored
         # group keys; new reps aren't in id_index yet and union in
@@ -813,7 +744,6 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
         old_touched_reps = old_touched_reps.localCheckpoint()
         pipe._record("add_lookup_touched_reps", old_touched_reps, t0,
                      skipped=False)
-        _trace("touched: prefix done")
         return touched_imgs, old_touched_reps
 
     # the touched-phash chain is the LONGEST of the setup chains (three
@@ -821,33 +751,29 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
     # branch in the NEXT wave — so it runs as a detached future joined
     # there, and the main thread proceeds to exact grouping as soon as
     # the three chains it actually needs are done (guide §2.6)
-    touched_future = _spawn(_touched_prefix)
+    touched_future = pipe._spawn(_touched_prefix)
     ((n_new, n_old, n_dead, n_all), n_clash,
-     (nk, old_keys)) = _run_parallel(_chk_counts, _chk_clash,
+     (nk, old_keys)) = _run_parallel(spark, _chk_counts, _chk_clash,
                                      _mk_old_keys)
-    if n_all != n_old - n_dead + n_new or n_clash:
-        # refusal path: don't leave the detached touched chain's jobs
-        # running into whatever the caller does after catching — join
-        # it best-effort before raising (its own error is secondary)
-        try:
-            touched_future.result()
-        except Exception:
-            pass
-        if n_all != n_old - n_dead + n_new:
-            raise ValueError("all_images must be exactly old ∪ new "
-                             "(minus removed rows)")
+    # a refusal leaves the touched chain to incremental_add, which joins
+    # every side chain before the error propagates
+    if n_all != n_old - n_dead + n_new:
+        raise ValueError("all_images must be exactly old ∪ new "
+                         "(minus removed rows)")
+    if n_clash:
         raise ValueError("new_images contains ids already in the build")
 
     staging = pipe._path("_add_staging")
     pipe.fs.delete(staging)
 
-    def stage(name: str, df: DataFrame) -> DataFrame:
+    def stage(name: str, df: DataFrame,
+              rows_in: int) -> "tuple[DataFrame, int]":
         """Materialize a delta under staging; record rows/secs as add_*."""
         t0 = time.time()
         df.write.mode("overwrite").parquet(f"{staging}/{name}")
         out = spark.read.parquet(f"{staging}/{name}")
-        pipe._record(f"add_{name}", out, t0, skipped=False)
-        return out
+        return out, pipe._record(f"add_{name}", out, t0, skipped=False,
+                                 rows_in=rows_in)
 
     # -- exact grouping of the new slice (no old bytes touched; the
     #    membership probe was a pruned point lookup into ck_index in
@@ -866,34 +792,14 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
                   .agg(F.min("image_id").alias("rep_id")))
     fresh = (fresh_keys.join(fresh_reps, "ck")
              .select("image_id", "rep_id", "ck"))
-    new_groups = stage("exact_groups", matched.unionByName(fresh))
+    new_groups, n_groups = stage("exact_groups",
+                                 matched.unionByName(fresh), n_new)
 
     # -- sketch only brand-new representatives ---------------------------
     new_rep_ids = (new_groups
                    .filter(F.col("image_id") == F.col("rep_id"))
                    .select("image_id"))
     to_sketch = new_images.join(new_rep_ids, "image_id", "left_semi")
-
-    # matched reps (old groups gaining members) depend only on the
-    # just-staged exact groups; the fused small-add tail needs them as a
-    # driver list, so the collect runs on a side thread under the whole
-    # sketch/band/verify phase (guide §2.6).
-    mr_expr = (new_groups
-               .join(new_images.select(F.col("image_id").alias("rep_id")),
-                     "rep_id", "left_anti")
-               .select("rep_id").distinct())
-    def _mr_collect():
-        mr = sorted(r["rep_id"] for r in mr_expr.collect())
-        rmp = ({r["old_rep"]: r["new_rep"] for r in remap_df.collect()}
-               if removals else {})
-        return mr, rmp
-
-    # spawn gate bounds the COLLECT (mr_list <= n_new rows), not the
-    # fused decision itself — if the posterior gate still picks the
-    # distributed tail (edge blow-up), the side collect was bounded and
-    # merely unused
-    mr_future = _spawn(_mr_collect) \
-        if n_new <= cfg.add_cc_local_max_edges else None
 
     # -- candidates: new-vs-new ∪ new-vs-old ∪ touched suffix groups -----
     # Each branch is cut with an eager localCheckpoint before the union:
@@ -911,36 +817,27 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
     # per-job latency into one wave; the suffix chain does not need the
     # new signatures, so it overlaps the decode+sketch stage too.
     def _br_sig_chain():
-        _trace("sig_chain: start")
-        new_sigs = stage("signatures", compute_signatures(to_sketch, cfg))
-        _trace("sig_chain: signatures staged")
+        new_sigs, n_sigs = stage("signatures",
+                                 compute_signatures(to_sketch, cfg),
+                                 n_groups)
 
         def bands_nn():
-            df = build_bands(new_sigs, cfg)
-            _trace("sig_chain: band salt stats done")
-            nb = stage("bands", df)
-            _trace("sig_chain: bands staged")
-            nn = emit_bucket_pairs(nb).localCheckpoint()
-            _trace("sig_chain: nn_pairs cut")
-            return nb, nn
+            nb, n_bands = stage("bands", build_bands(new_sigs, cfg),
+                                n_sigs)
+            return n_bands, emit_bucket_pairs(nb).localCheckpoint()
 
-        (nb, nn), no_p = _run_parallel(
-            bands_nn, lambda: _probe_old_pairs(new_sigs))
-        return nb, nn, no_p
+        (n_bands, nn), no_p = _run_parallel(
+            spark, bands_nn, lambda: _probe_old_pairs(new_sigs))
+        return n_bands, nn, no_p
 
     def _br_ck_stage():
-        _trace("ck_stage: start")
         stage_ck_append(new_groups, staging, cfg)
-        _trace("ck_stage: done")
 
     def _probe_old_pairs(new_sigs):
-        _trace("probe: start")
         no_pairs = probe_pairs_vs_stored(explode_all_bands(new_sigs, cfg),
                                          old_bands)
         if not removals:
-            out = no_pairs.localCheckpoint()
-            _trace("probe: no_pairs cut")
-            return out
+            return no_pairs.localCheckpoint()
         # stored bands stay keyed by founding group nodes until
         # compaction: pairs against a DEAD group's node are content
         # that no longer exists (drop), and pairs against a tombstoned
@@ -984,11 +881,9 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
         touched_reps = (touched_imgs.join(
             old_touched_reps.unionByName(new_rep_ids), "image_id",
             "left_semi").localCheckpoint())
-        _trace("touched: touched_reps cut")
         # sfx feeds BOTH union arms below — cut it first, or the shared
         # exchange under the two consumers trips the AQE reuse bug
         sfx = suffix_candidate_pairs(touched_reps).localCheckpoint()
-        _trace("touched: sfx cut")
         return (sfx.join(new_rep_ids.withColumnRenamed("image_id", "a"),
                          "a", "left_semi")
                 .unionByName(
@@ -997,11 +892,12 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
                              "b", "left_semi"))
                 .dropDuplicates(["a", "b"])).localCheckpoint()
 
-    (new_bands, nn_pairs, no_pairs), sfx_new, _ = _run_parallel(
-        _br_sig_chain, _br_touched, _br_ck_stage)
-    new_pairs = stage("candidate_pairs",
-                      nn_pairs.unionByName(no_pairs).unionByName(sfx_new)
-                      .groupBy("a", "b").agg(F.min("src").alias("src")))
+    (n_bands, nn_pairs, no_pairs), sfx_new, _ = _run_parallel(
+        spark, _br_sig_chain, _br_touched, _br_ck_stage)
+    new_pairs, n_pairs = stage(
+        "candidate_pairs",
+        nn_pairs.unionByName(no_pairs).unionByName(sfx_new)
+        .groupBy("a", "b").agg(F.min("src").alias("src")), n_bands)
 
     # -- verify only new-touching pairs, capped per new item -------------
     plausible = prefilter_pairs(new_pairs, all_images,
@@ -1043,42 +939,10 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
                                broadcast_max_ids=cfg.verify_broadcast_max_ids,
                                materialize_slim=True)
 
-    # PREFETCH the endpoint-label lookup under the verify stage (guide
-    # §2.6): every verified edge endpoint is an endpoint of `capped`
-    # (edges = verify(capped) filtered), and the matched reps' promoted
-    # members are known from the mr collect — so the pruned id_index
-    # lookup the fused tail needs can run NOW, off the critical path,
-    # on the (slightly larger) capped-endpoint superset.  The side
-    # thread self-gates on the driver budget: past the bound it returns
-    # None and the tail falls back to the inline lookup / distributed
-    # path.  Probing a superset only ADDS rows for ids the tail then
-    # filters out — labels for non-edge endpoints are never read.
-    def _ep_prefetch():
-        if mr_future is None:
-            return None
-        mr_l, rmp = mr_future.result()
-        n_cap = capped.count()
-        if (2 * n_cap + n_new) > cfg.add_cc_local_max_edges:
-            return None  # collect would blow the driver budget
-        lreps = sorted({rmp.get(r, r) for r in mr_l})
-        cap_ids = (capped.select(F.col("a").alias("image_id"))
-                   .unionByName(capped.select(F.col("b")
-                                              .alias("image_id")))
-                   .distinct())
-        probe = cap_ids
-        if lreps:
-            probe = probe.unionByName(spark.createDataFrame(
-                [(i,) for i in lreps],
-                schema="image_id string")).distinct()
-        rows = lookup_id_index(spark, id_path, probe, cfg,
-                               idx_df=id_idx_df).collect()
-        _trace("fused: ep prefetch done")
-        return mr_l, rmp, rows
-
-    ep_future = _spawn(_ep_prefetch)
-    new_edges = stage("verified_edges",
-                      verify_pairs(attached, cfg).filter(F.col("dup"))
-                      .select("a", "b", "src", "psnr", "caption_eq"))
+    new_edges, n_edges = stage(
+        "verified_edges",
+        verify_pairs(attached, cfg).filter(F.col("dup"))
+        .select("a", "b", "src", "psnr", "caption_eq"), n_pairs)
 
     # -- INCREMENTAL clusters: CC by contraction ------------------------
     # Stored clusters are exactly CC(stored edges), so contracting each
@@ -1089,9 +953,7 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
     # lookup (partition filter + IN-list row-group pruning) — neither
     # the stored clusters table nor any other corpus-sized relation is
     # scanned on this path.
-    gen_file = os.path.join(checkpoint_dir, ID_GEN_FILE)
-    new_gen = (int(pipe.fs.read_text(gen_file))
-               if pipe.fs.exists(gen_file) else 0) + 1
+    new_gen = _next_id_gen(pipe.fs, checkpoint_dir)
 
     def _c_edge_for(ep_info):
         # dedup-graph edge delta for the remove path's split
@@ -1114,220 +976,88 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
                   .distinct())
         stage_edge_append(fedges, staging, cfg)
 
-    def _pb(col: str) -> "F.Column":
-        return F.pmod(F.xxhash64(col), F.lit(cfg.cluster_buckets)) \
-                .cast("int")
-
-    # FUSED small-add tail (guide §2.6 taken to its limit): the whole
-    # labels -> contracted-CC -> affected-set algebra operates on sets
-    # bounded by O(new edges + new rows) — the SAME magnitude the
-    # union-find fast path has always collected — yet the DataFrame form
-    # paid ~5 small jobs of latency (mr_map cut, ep_info cut, labels
-    # record, label_edges cut, affected collect).  When that bound fits
-    # the existing driver-CC budget, three collects (matched reps, the
-    # staged edge list, the pruned ep_info lookup) bring the inputs to
-    # the driver and plain dict/set algebra replaces the join chain —
-    # provably the same maps: get(x, x) IS coalesce over a left join,
-    # the set comprehension IS the distinct union.  Bulk adds past the
-    # bound keep the distributed DataFrame path verbatim below.
-    n_edges_rec = next(r.rows_out for r in reversed(pipe.records)
-                       if r.stage == "add_verified_edges")
-    fused_small = (n_edges_rec + n_new) <= cfg.add_cc_local_max_edges
-    if fused_small:
-        t0 = time.time()
-        prefetch = ep_future.result()
-        if prefetch is not None:
-            mr_list, remap, super_rows = prefetch
-        else:
-            # fused_small implies n_new <= add_cc_local_max_edges — the
-            # exact mr_future spawn gate — so the future always exists
-            # here; only the ep prefetch may have self-gated out
-            mr_list, remap = mr_future.result()
-            super_rows = None
-        _trace("fused: mr joined")
-        # a matched group's founding rep may be tombstoned (group
-        # alive): its own id_index label is a stale null-or-old row, so
-        # the LABEL is read through the promoted surviving member
-        # (lrep), while group identity stays the founding node
-        mr_pairs = [(r, remap.get(r, r)) for r in mr_list]
-        edge_rows = [(r["a"], r["b"]) for r in
-                     new_edges.select("a", "b").collect()]
-        _trace("fused: edges collected")
-        ep_ids = ({a for a, _ in edge_rows} | {b for _, b in edge_rows}
-                  | {l for _, l in mr_pairs})
-        if super_rows is not None:
-            # prefetched superset (capped endpoints ∪ lreps) ⊇ ep_ids:
-            # restricting the collected rows IS the direct lookup
-            ep_rows = [r for r in super_rows if r["image_id"] in ep_ids]
-        else:
-            ep_probe = spark.createDataFrame(
-                [(i,) for i in sorted(ep_ids)], schema="image_id string")
-            ep_rows = lookup_id_index(spark, id_path, ep_probe, cfg,
-                                      idx_df=id_idx_df).collect()
-        _trace("fused: ep_info collected")
-        ep_info = spark.createDataFrame(
-            [(r["image_id"], r["cluster_id"], r["is_rep"], r["rep_id"])
-             for r in ep_rows],
-            schema="image_id string, cluster_id string, "
-                   "is_rep boolean, rep_id string")
-        edge_future = _spawn(lambda: _c_edge_for(ep_info))
-        # defensive None-guard: a NULL cluster_id (a "stale null-or-old
-        # row") must behave like an ABSENT label — the DataFrame path's
-        # coalesce(label, id) rescues it, so the dict must not store
-        # None (get(x, x) then rescues identically, and a None could
-        # never equi-join in the stored-label set either).  ep_info
-        # keeps the full row: its rep_id still serves the edge delta.
-        labels_live = {r["image_id"]: r["cluster_id"] for r in ep_rows
-                       if r["cluster_id"] is not None}
-        labels_map = dict(labels_live)
-        if removals:
-            for rep, lrep in mr_pairs:
-                if lrep in labels_live:  # inner-join semantics
-                    labels_map[rep] = labels_live[lrep]
-        labels = spark.createDataFrame(
-            sorted(labels_map.items()),
-            schema="image_id string, label string")
-        pipe._record("add_lookup_labels", labels, t0, skipped=False)
-        t0 = time.time()
-        le_set = set()
-        for a, b in edge_rows:
-            la = labels_map.get(a, a)
-            lb = labels_map.get(b, b)
-            if la != lb:
-                le_set.add((la, lb))
-        label_edges = spark.createDataFrame(
-            sorted(le_set), schema="a string, b string")
-        pipe._record("add_cc_edges", label_edges, t0, skipped=False)
-        mapping = union_find(sorted(le_set))
-        rep_cc = spark.createDataFrame(
-            sorted(mapping.items()),
-            schema="image_id string, cluster_id string")
-        # affected clusters: merged old labels ∪ clusters whose
-        # exact-groups gained members (their min MEMBER id — the label
-        # under the from-scratch normalization contract — may change)
-        t0 = time.time()
-        stored_label_set = set(labels_map.values())
-        aff_set = {l for l in mapping if l in stored_label_set}
-        aff_set |= {labels_map[r] for r in mr_list if r in labels_map}
-        aff_cl = spark.createDataFrame(
-            [(l,) for l in sorted(aff_set)], schema="cluster_id string")
-        # bucket ids via the SAME Spark hash expression the layout uses
-        # (xxhash64 is not reimplemented driver-side) — one LocalRelation
-        # job over O(affected) rows
-        aff_buckets = sorted(
-            {r["pb"] for r in
-             aff_cl.select(_pb("cluster_id").alias("pb")).collect()})
+    t0 = time.time()
+    # old reps gaining members
+    matched_reps = (new_groups
+                    .join(new_images.select(F.col("image_id")
+                                            .alias("rep_id")),
+                          "rep_id", "left_anti")
+                    .select("rep_id").distinct())
+    # a matched group's founding rep may be tombstoned (group
+    # alive): label read through the promoted surviving member
+    if removals:
+        mr_map = (matched_reps
+                  .join(F.broadcast(remap_df.withColumnRenamed(
+                      "old_rep", "rep_id")), "rep_id", "left")
+                  .select("rep_id",
+                          F.coalesce("new_rep", "rep_id").alias("lrep"))
+                  .localCheckpoint())
     else:
-        # the advisory prefetch future must not outlive this call (its
-        # detached jobs would run past commit/lock release and any
-        # exception would vanish): join it best-effort — for bulk adds
-        # it either never spawned the lookup (mr gate) or self-gated
-        # out after a cheap count, so this waits ~0 in practice
-        try:
-            ep_future.result()
-        except Exception:
-            pass  # advisory only; the inline path below is authoritative
-        t0 = time.time()
-        matched_reps = mr_expr  # old reps gaining members
-        # a matched group's founding rep may be tombstoned (group
-        # alive): label read through the promoted surviving member
-        if removals:
-            mr_map = (matched_reps
-                      .join(F.broadcast(remap_df.withColumnRenamed(
-                          "old_rep", "rep_id")), "rep_id", "left")
-                      .select("rep_id",
-                              F.coalesce("new_rep", "rep_id")
-                              .alias("lrep"))
-                      .localCheckpoint())
-        else:
-            mr_map = matched_reps.select("rep_id",
-                                         F.col("rep_id").alias("lrep"))
-        endpoint_ids = (new_edges.select(F.col("a").alias("image_id"))
-                        .unionByName(new_edges.select(F.col("b")
-                                                      .alias("image_id")))
-                        .unionByName(mr_map.select(F.col("lrep")
-                                                   .alias("image_id")))
-                        .distinct())
-        # endpoint labels via the id-keyed layout: pruned point lookup,
-        # O(new edges + matched reps) rows read.  The same lookup also
-        # resolves each old endpoint's FOUNDING group node (rep_id) for
-        # the edge_index delta.
-        ep_info = (lookup_id_index(spark, id_path, endpoint_ids, cfg,
-                                   idx_df=id_idx_df)
-                   .localCheckpoint())  # O(new edges + matched reps)
-        # the edge_index delta needs only ep_info + the staged
-        # new_edges — its staging write overlaps the labels->CC->delta
-        # chain on a side thread (guide §2.6)
-        edge_future = _spawn(lambda: _c_edge_for(ep_info))
-        labels_live = ep_info.select("image_id",
-                                     F.col("cluster_id").alias("label"))
-        if removals:
-            # founding reps resolve their label via their promoted
-            # member
-            labels = (labels_live.unionByName(
-                mr_map.join(labels_live.withColumnRenamed("image_id",
-                                                          "lrep"),
-                            "lrep")
-                .select(F.col("rep_id").alias("image_id"), "label"))
-                .distinct())
-        else:
-            labels = labels_live
-        pipe._record("add_lookup_labels", labels, t0, skipped=False)
-        t0 = time.time()
-        lab_a = labels.select(F.col("image_id").alias("a"),
-                              F.col("label").alias("la"))
-        lab_b = labels.select(F.col("image_id").alias("b"),
-                              F.col("label").alias("lb"))
-        label_edges = (new_edges.select("a", "b")
-                       .join(F.broadcast(lab_a), "a", "left")
-                       .join(F.broadcast(lab_b), "b", "left")
-                       .select(F.coalesce("la", F.col("a")).alias("a"),
-                               F.coalesce("lb", F.col("b")).alias("b"))
-                       .filter(F.col("a") != F.col("b"))
-                       .distinct().localCheckpoint())
-        pipe._record("add_cc_edges", label_edges, t0, skipped=False)
-        n_label_edges = next(r.rows_out for r in reversed(pipe.records)
-                             if r.stage == "add_cc_edges")
-        small_graph = n_label_edges <= cfg.add_cc_local_max_edges
-        if small_graph:
-            # small contracted graph: driver union-find beats
-            # O(log^2 n) distributed rounds of per-job latency
-            # (identical min-member labels)
-            mapping = union_find([(r["a"], r["b"])
-                                  for r in label_edges.collect()])
-            rep_cc = spark.createDataFrame(
-                sorted(mapping.items()),
-                schema="image_id string, cluster_id string")
-        else:
-            rep_cc = connected_components(label_edges).localCheckpoint()
-
-        # affected clusters: merged old labels ∪ clusters whose
-        # exact-groups gained members
-        t0 = time.time()
-        stored_labels = labels.select("label").distinct()
-        matched_rep_labels = (matched_reps
-                              .join(labels.withColumnRenamed("image_id",
-                                                             "rep_id"),
-                                    "rep_id")
-                              .select("label"))
-        aff_expr = (rep_cc.select(F.col("image_id").alias("label"))
-                    .join(stored_labels, "label", "left_semi")
-                    .unionByName(matched_rep_labels)
+        mr_map = matched_reps.select("rep_id", F.col("rep_id").alias("lrep"))
+    endpoint_ids = (new_edges.select(F.col("a").alias("image_id"))
+                    .unionByName(new_edges.select(F.col("b")
+                                                  .alias("image_id")))
+                    .unionByName(mr_map.select(F.col("lrep")
+                                               .alias("image_id")))
                     .distinct())
-        if small_graph:
-            # ONE collect resolves labels AND their bucket set
-            aff_rows = (aff_expr.select("label", _pb("label").alias("pb"))
-                        .collect())
-            aff_buckets = sorted({r["pb"] for r in aff_rows})
-            aff_cl = spark.createDataFrame(
-                [(r["label"],) for r in aff_rows],
-                schema="cluster_id string")
-        else:
-            aff = aff_expr.localCheckpoint()
-            aff_buckets = sorted(r[0] for r in
-                                 aff.select(_pb("label").alias("pb"))
-                                 .distinct().collect())
-            aff_cl = aff.withColumnRenamed("label", "cluster_id")
+    # endpoint labels via the id-keyed layout: pruned point lookup,
+    # O(new edges + matched reps) rows read.  The same lookup also
+    # resolves each old endpoint's FOUNDING group node (rep_id) for
+    # the edge_index delta.
+    ep_info = (lookup_id_index(spark, id_path, endpoint_ids, cfg,
+                               idx_df=id_idx_df)
+               .localCheckpoint())  # O(new edges + matched reps)
+    # the edge_index delta needs only ep_info + the staged
+    # new_edges — its staging write overlaps the labels->CC->delta
+    # chain on a side thread (guide §2.6)
+    edge_future = pipe._spawn(lambda: _c_edge_for(ep_info))
+    labels_live = ep_info.select("image_id",
+                                 F.col("cluster_id").alias("label"))
+    if removals:
+        # founding reps resolve their label via their promoted member
+        labels = (labels_live.unionByName(
+            mr_map.join(labels_live.withColumnRenamed("image_id", "lrep"),
+                        "lrep")
+            .select(F.col("rep_id").alias("image_id"), "label"))
+            .distinct())
+    else:
+        labels = labels_live
+    n_labels = pipe._record("add_lookup_labels", labels, t0,
+                            skipped=False, rows_in=n_edges)
+    t0 = time.time()
+    lab_a = labels.select(F.col("image_id").alias("a"),
+                          F.col("label").alias("la"))
+    lab_b = labels.select(F.col("image_id").alias("b"),
+                          F.col("label").alias("lb"))
+    label_edges = (new_edges.select("a", "b")
+                   .join(F.broadcast(lab_a), "a", "left")
+                   .join(F.broadcast(lab_b), "b", "left")
+                   .select(F.coalesce("la", F.col("a")).alias("a"),
+                           F.coalesce("lb", F.col("b")).alias("b"))
+                   .filter(F.col("a") != F.col("b"))
+                   .distinct().localCheckpoint())
+    n_label_edges = pipe._record("add_cc_edges", label_edges, t0,
+                                 skipped=False, rows_in=n_edges)
+    rep_cc = components(label_edges, n_label_edges, cfg)
+
+    # affected clusters: merged old labels ∪ clusters whose
+    # exact-groups gained members (their min MEMBER id — the label
+    # under the from-scratch normalization contract — may change).
+    # Every affected label is a row of `labels`, so n_labels bounds it
+    t0 = time.time()
+    stored_labels = labels.select("label").distinct()
+    matched_rep_labels = (matched_reps
+                          .join(labels.withColumnRenamed("image_id",
+                                                         "rep_id"),
+                                "rep_id")
+                          .select("label"))
+    aff_cl, aff_buckets = _affected_clusters(
+        spark, cfg,
+        rep_cc.select(F.col("image_id").alias("label"))
+        .join(stored_labels, "label", "left_semi")
+        .unionByName(matched_rep_labels)
+        .distinct().withColumnRenamed("label", "cluster_id"),
+        n_labels)
     # member rows of affected clusters ONLY, read under pbucket pruning
     aff_members = (clusters_stored
                    .filter(F.col("pbucket").isin(aff_buckets))
@@ -1366,83 +1096,139 @@ def _incremental_add_locked(spark: SparkSession, cfg: PipelineConfig,
     delta = (members.join(F.broadcast(norm), "root")
              .select("image_id", "cluster_id", "is_rep", "rep_id")
              .localCheckpoint())
-    pipe._record("add_clusters", delta, t0, skipped=False)
+    n_delta = pipe._record("add_clusters", delta, t0, skipped=False,
+                           rows_in=n_label_edges)
 
     # -- stage the rewritten clusters partitions (touched buckets only)
-    #    and the id_index delta — the ck_index delta was staged in the
-    #    parallel candidate block and the edge_index delta has been
-    #    staging on a side thread since ep_info was cut --------------
-    def _c_clusters():
-        t0 = time.time()
-        delta_buckets = {r[0] for r in
-                         delta.select(_pb("cluster_id").alias("pb"))
-                         .distinct().collect()}
-        touched = sorted(set(aff_buckets) | delta_buckets)
-        kept = (clusters_stored.filter(F.col("pbucket").isin(touched))
-                .join(F.broadcast(aff_cl.select("cluster_id")),
-                      "cluster_id", "left_anti")
-                .select("image_id", "cluster_id"))
-        (kept.unionByName(delta.select("image_id", "cluster_id"))
-         .withColumn("pbucket", _pb("cluster_id"))
-         .repartition(max(len(touched), 1), F.col("pbucket"))
-         .write.mode("overwrite").partitionBy("pbucket")
-         .parquet(f"{staging}/clusters"))
-        staged_clusters = spark.read.parquet(f"{staging}/clusters")
-        pipe._record("add_clusters_rewrite", staged_clusters, t0,
-                     skipped=False)
-        present = {r[0] for r in staged_clusters.select("pbucket")
-                   .distinct().collect()}
-        # a touched bucket with no staged rows (all its clusters merged
-        # away into other buckets) must be DELETED at commit, not stale
-        return {str(p): bool(p in present) for p in touched}
-
-    # key-index deltas: brand-new (ck, rep_id) rows were staged in the
-    # candidate block; the re-labelled/new member rows stage at the next
-    # id_index generation (LSM append, latest-gen-wins — no stored index
-    # rows are read or rewritten)
-    def _c_id():
-        stage_id_append(delta, new_gen, staging, cfg)
-
+    #    and the id_index delta at the next generation (LSM append,
+    #    latest-gen-wins — no stored index rows are read or rewritten).
+    #    The ck_index delta was staged in the parallel candidate block
+    #    and the edge_index delta has been staging on a side thread
+    #    since ep_info was cut -------------------------------------------
     t0 = time.time()
-    swap, _ = _run_parallel(_c_clusters, _c_id)
+    swap, _ = _run_parallel(
+        spark,
+        lambda: _stage_clusters_rewrite(pipe, clusters_stored, aff_cl,
+                                        aff_buckets, delta, staging,
+                                        "add_clusters_rewrite", n_delta),
+        lambda: stage_id_append(delta, new_gen, staging, cfg))
     edge_future.result()  # staged since ep_info; must land pre-manifest
     pipe._record("add_index_delta",
                  spark.read.parquet(f"{staging}/id_index"), t0,
-                 skipped=False)
+                 skipped=False, rows_in=n_delta)
+    return _commit_mutation(
+        pipe, staging,
+        ["exact_groups", "signatures", "bands", "candidate_pairs",
+         "verified_edges"],
+        ["ck_index", "id_index", "edge_index"], new_gen, swap)
 
-    # -- commit: manifest first, then renames; crash => roll-forward -----
+
+def _pb(cfg: PipelineConfig, col: str) -> "F.Column":
+    """pbucket of a cluster-id column (the clusters checkpoint's
+    hive-partition key, see :func:`cluster_pbucket`)."""
+    return F.pmod(F.xxhash64(col), F.lit(cfg.cluster_buckets)).cast("int")
+
+
+def _next_id_gen(fs: CheckpointFS, root: str) -> int:
+    """The id_index generation a mutation stages its delta at: one past
+    the committed counter (the commit writes it back)."""
+    gen_file = os.path.join(root, ID_GEN_FILE)
+    return (int(fs.read_text(gen_file)) if fs.exists(gen_file) else 0) + 1
+
+
+def _affected_clusters(spark: SparkSession, cfg: PipelineConfig,
+                       labels: DataFrame,
+                       n_bound: int) -> "tuple[DataFrame, list[int]]":
+    """A mutation's affected clusters: the distinct ``cluster_id``
+    column ``labels`` and the sorted pbucket ids holding them.  When
+    ``n_bound`` (an upper bound on the label count) fits the literal cap,
+    ONE collect resolves the labels AND their bucket set; otherwise the
+    labels are cut and only their bucket ids are collected."""
+    if n_bound <= cfg.add_lookup_max_literals:
+        rows = (labels.select("cluster_id",
+                              _pb(cfg, "cluster_id").alias("pb"))
+                .collect())
+        aff = spark.createDataFrame([(r["cluster_id"],) for r in rows],
+                                    schema="cluster_id string")
+        return aff, sorted({r["pb"] for r in rows})
+    aff = labels.localCheckpoint()
+    return aff, sorted(r[0] for r in
+                       aff.select(_pb(cfg, "cluster_id").alias("pb"))
+                       .distinct().collect())
+
+
+def _stage_clusters_rewrite(pipe: NearDupPipeline, clusters_stored: DataFrame,
+                            aff: DataFrame, aff_buckets: "list[int]",
+                            delta: DataFrame, staging: str, stage: str,
+                            rows_in: int) -> "dict[str, bool]":
+    """Stage the rewritten clusters partitions of a mutation: every
+    touched bucket (holding an affected cluster before, or a delta row
+    after) keeps its unaffected rows plus the delta's.  Records ``stage``
+    and returns the commit's swap map: bucket -> whether it has staged
+    rows (a touched bucket left empty — all its clusters merged away or
+    removed — must be DELETED at commit, not left stale)."""
+    cfg, spark = pipe.cfg, pipe.spark
+    t0 = time.time()
+    delta_buckets = {r[0] for r in
+                     delta.select(_pb(cfg, "cluster_id").alias("pb"))
+                     .distinct().collect()}
+    touched = sorted(set(aff_buckets) | delta_buckets)
+    kept = (clusters_stored.filter(F.col("pbucket").isin(touched))
+            .join(F.broadcast(aff.select("cluster_id")), "cluster_id",
+                  "left_anti")
+            .select("image_id", "cluster_id"))
+    (kept.unionByName(delta.select("image_id", "cluster_id"))
+     .withColumn("pbucket", _pb(cfg, "cluster_id"))
+     .repartition(max(len(touched), 1), F.col("pbucket"))
+     .write.mode("overwrite").partitionBy("pbucket")
+     .parquet(f"{staging}/clusters"))
+    # explicit schema: a rewrite that empties every touched bucket
+    # stages an EMPTY dir, which inference cannot read
+    staged = (spark.read
+              .schema("image_id string, cluster_id string, pbucket int")
+              .parquet(f"{staging}/clusters"))
+    pipe._record(stage, staged, t0, skipped=False, rows_in=rows_in)
+    present = {r[0] for r in staged.select("pbucket").distinct().collect()}
+    return {str(p): bool(p in present) for p in touched}
+
+
+def _commit_mutation(pipe: NearDupPipeline, staging: str,
+                     append_stages: "list[str]",
+                     partitioned_appends: "list[str]", new_gen: int,
+                     swap: "dict[str, bool]") -> DataFrame:
+    """Commit a fully staged add or remove: manifest first, then renames
+    (a crash after the manifest write rolls FORWARD via
+    :func:`recover_add_commit`), then post-commit housekeeping.  Returns
+    the live clusters table."""
     manifest = {"version": 2, "staging": staging,
-                "append_stages": ["exact_groups", "signatures", "bands",
-                                  "candidate_pairs", "verified_edges"],
-                "partitioned_appends": ["ck_index", "id_index",
-                                        "edge_index"],
+                "append_stages": append_stages,
+                "partitioned_appends": partitioned_appends,
                 "id_index_gen": new_gen,
                 "clusters_swap": swap}
-    mpath = os.path.join(checkpoint_dir, ADD_MANIFEST)
-    _trace("commit: manifest")
+    mpath = os.path.join(pipe.dir, ADD_MANIFEST)
     pipe.fs.write_text(mpath, json.dumps(manifest))
-    _apply_add_commit(pipe.fs, checkpoint_dir, manifest)
+    _apply_add_commit(pipe.fs, pipe.dir, manifest)
     pipe.fs.delete(mpath)
-    _trace("commit: applied")
-
     # post-commit housekeeping: the staging wipe (recursive FS delete),
     # the lineage flush (one parquet append job) and the file-status
     # cache refresh (the swap happened via raw FS renames, invisible to
     # Spark's shared cache — the documented plan-cache-over-rewritten-
     # path pitfall, FS-metadata edition) touch disjoint state and run
     # CONCURRENTLY (guide §2.6)
-    def _refresh():
-        for name in ("exact_groups", "signatures", "bands",
-                     "candidate_pairs", "verified_edges", "clusters",
-                     "ck_index", "id_index", "edge_index"):
-            spark.catalog.refreshByPath(pipe._path(name))
-
-    _run_parallel(lambda: pipe.fs.delete(staging),
-                  pipe._flush_state,  # one lineage append for the add
-                  _refresh)
-    _trace("commit: housekeeping done")
-    return (spark.read.parquet(pipe._path("clusters"))
+    _run_parallel(pipe.spark,
+                  lambda: pipe.fs.delete(staging),
+                  pipe._flush_state,  # one lineage append per mutation
+                  lambda: _refresh_tables(pipe.spark, pipe.dir, manifest))
+    return (pipe.spark.read.parquet(pipe._path("clusters"))
             .select("image_id", "cluster_id"))
+
+
+def _refresh_tables(spark: SparkSession, root: str, manifest: dict) -> None:
+    """Drop Spark's cached file listings of every table a commit moved
+    files into."""
+    for name in (manifest["append_stages"]
+                 + manifest.get("partitioned_appends", []) + ["clusters"]):
+        spark.catalog.refreshByPath(f"{root}/{name}")
 
 
 def _apply_add_commit(fs: CheckpointFS, root: str, manifest: dict) -> None:
@@ -1485,11 +1271,11 @@ def _apply_add_commit(fs: CheckpointFS, root: str, manifest: dict) -> None:
     # per-table rename loops (hundreds of FS metadata calls for the
     # key_buckets-partitioned sidecars) run concurrently; a crash
     # mid-commit recovers exactly as before, table by table
-    _run_parallel(*[(lambda n=n: _move_flat(n))
-                    for n in manifest["append_stages"]],
-                  *[(lambda n=n: _move_partitioned(n))
-                    for n in manifest.get("partitioned_appends", [])])
-    _trace("commit: table moves done")
+    _fanout(lambda move: move(),
+            [(lambda n=n: _move_flat(n))
+             for n in manifest["append_stages"]]
+            + [(lambda n=n: _move_partitioned(n))
+               for n in manifest.get("partitioned_appends", [])])
     if "id_index_gen" in manifest:
         fs.write_text(f"{root}/{ID_GEN_FILE}",
                       str(manifest["id_index_gen"]))
@@ -1528,8 +1314,5 @@ def recover_add_commit(spark: SparkSession, checkpoint_dir: str) -> bool:
     _apply_add_commit(fs, checkpoint_dir, manifest)
     fs.delete(mpath)
     fs.delete(manifest["staging"])
-    for name in (manifest["append_stages"]
-                 + manifest.get("partitioned_appends", [])
-                 + ["clusters"]):
-        spark.catalog.refreshByPath(f"{checkpoint_dir}/{name}")
+    _refresh_tables(spark, checkpoint_dir, manifest)
     return True

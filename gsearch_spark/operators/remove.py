@@ -50,8 +50,6 @@ rebuild over the surviving images — including label renames and splits.
 
 from __future__ import annotations
 
-import json
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -146,6 +144,7 @@ def remove_images(spark: SparkSession, cfg: PipelineConfig,
     try:
         return _remove_locked(spark, cfg, checkpoint_dir, remove_ids, pipe)
     finally:
+        pipe._join_side()  # no side job may outlive the lock
         if lock_owner:
             release_add_lock(pipe.fs, checkpoint_dir)
 
@@ -153,12 +152,15 @@ def remove_images(spark: SparkSession, cfg: PipelineConfig,
 def _remove_locked(spark: SparkSession, cfg: PipelineConfig,
                    checkpoint_dir: str, remove_ids: DataFrame,
                    pipe) -> DataFrame:
-    from gsearch_spark.operators.cc import connected_components, union_find
+    from gsearch_spark.operators.cc import components
     from gsearch_spark.operators.keyidx import (lookup_edges_among,
                                                 lookup_id_index,
                                                 stage_id_append)
-    from gsearch_spark.operators.pipeline import (ADD_MANIFEST, ID_GEN_FILE,
-                                                  _apply_add_commit,
+    from gsearch_spark.operators.pipeline import (_affected_clusters,
+                                                  _commit_mutation,
+                                                  _next_id_gen,
+                                                  _run_parallel,
+                                                  _stage_clusters_rewrite,
                                                   recover_add_commit)
 
     cfg.assert_matches_via(pipe.fs, checkpoint_dir)
@@ -174,7 +176,6 @@ def _remove_locked(spark: SparkSession, cfg: PipelineConfig,
     id_idx_df = spark.read.parquet(id_path)
     clusters_stored = spark.read.parquet(pipe._path("clusters"))
 
-    from gsearch_spark.operators.pipeline import _run_parallel
     rm = remove_ids.select("image_id").distinct().localCheckpoint()
     n_rm = rm.count()
     if n_rm == 0:
@@ -187,9 +188,8 @@ def _remove_locked(spark: SparkSession, cfg: PipelineConfig,
         t0 = time.time()
         info = lookup_id_index(spark, id_path, rm, cfg,
                                idx_df=id_idx_df).localCheckpoint()
-        pipe._record("rm_lookup_ids", info, t0, skipped=False)
-        return info, next(r for r in pipe.records
-                          if r.stage == "rm_lookup_ids").rows_out
+        return info, pipe._record("rm_lookup_ids", info, t0,
+                                  skipped=False, rows_in=n_rm)
 
     def _chk_already():
         already = rm.join(read_tombstones(spark, checkpoint_dir),
@@ -197,7 +197,8 @@ def _remove_locked(spark: SparkSession, cfg: PipelineConfig,
         return None if already.isEmpty() else \
             [r[0] for r in already.limit(5).collect()]
 
-    (info, n_info), already_ids = _run_parallel(_lk_info, _chk_already)
+    (info, n_info), already_ids = _run_parallel(spark, _lk_info,
+                                                _chk_already)
     if n_info != n_rm:
         missing = rm.join(info.select("image_id"), "image_id", "left_anti")
         raise ValueError(
@@ -211,12 +212,9 @@ def _remove_locked(spark: SparkSession, cfg: PipelineConfig,
     # tombstone staging needs only the (already-checkpointed) rm list
     # and the next generation number — start it NOW on a side thread so
     # it overlaps the whole members/CC/delta chain below (guide §2.6)
-    from gsearch_spark.operators.pipeline import _spawn
     staging = pipe._path("_add_staging")
     pipe.fs.delete(staging)
-    gen_file = os.path.join(checkpoint_dir, ID_GEN_FILE)
-    new_gen = (int(pipe.fs.read_text(gen_file))
-               if pipe.fs.exists(gen_file) else 0) + 1
+    new_gen = _next_id_gen(pipe.fs, checkpoint_dir)
 
     def _st_tomb():
         (rm.withColumn("gen", F.lit(new_gen))
@@ -226,29 +224,13 @@ def _remove_locked(spark: SparkSession, cfg: PipelineConfig,
          .write.mode("overwrite").partitionBy("tb")
          .parquet(f"{staging}/{TOMBSTONES}"))
 
-    tomb_future = _spawn(_st_tomb)
+    tomb_future = pipe._spawn(_st_tomb)
 
-    # -- affected clusters: members read under pbucket pruning ----------
-    def _pb(col: str) -> "F.Column":
-        return F.pmod(F.xxhash64(col), F.lit(cfg.cluster_buckets)) \
-                .cast("int")
-
+    # -- affected clusters (bounded by the remove batch): members read
+    #    under pbucket pruning ---------------------------------------------
     t0 = time.time()
-    if n_rm <= cfg.add_lookup_max_literals:
-        # the affected-label set is bounded by the remove batch: ONE
-        # collect resolves the labels AND their bucket set (instead of
-        # a localCheckpoint job + a buckets-only collect job)
-        aff_rows = (info.select("cluster_id").distinct()
-                    .select("cluster_id", _pb("cluster_id").alias("pb"))
-                    .collect())
-        aff_buckets = sorted({r["pb"] for r in aff_rows})
-        aff = spark.createDataFrame([(r["cluster_id"],) for r in aff_rows],
-                                    schema="cluster_id string")
-    else:
-        aff = info.select("cluster_id").distinct().localCheckpoint()
-        aff_buckets = sorted(r[0] for r in
-                             aff.select(_pb("cluster_id").alias("pb"))
-                             .distinct().collect())
+    aff, aff_buckets = _affected_clusters(
+        spark, cfg, info.select("cluster_id").distinct(), n_rm)
     members = (clusters_stored
                .filter(F.col("pbucket").isin(aff_buckets))
                .join(F.broadcast(aff), "cluster_id")
@@ -259,7 +241,8 @@ def _remove_locked(spark: SparkSession, cfg: PipelineConfig,
                              cfg, idx_df=id_idx_df)
              .select("image_id", "rep_id"))
     mem = members.join(minfo, "image_id").localCheckpoint()
-    pipe._record("rm_members", mem, t0, skipped=False)
+    n_mem = pipe._record("rm_members", mem, t0, skipped=False,
+                         rows_in=n_info)
 
     # PREFETCH the dedup-graph edge read (guide §2.6): the surviving
     # nodes are a subset of ALL affected founding nodes, which are known
@@ -274,7 +257,7 @@ def _remove_locked(spark: SparkSession, cfg: PipelineConfig,
         return lookup_edges_among(spark, edge_path, all_nodes,
                                   cfg).localCheckpoint()
 
-    edges_future = _spawn(_edges_prefetch)
+    edges_future = pipe._spawn(_edges_prefetch)
 
     surv = mem.join(rm, "image_id", "left_anti").localCheckpoint()
     # cut once: surv_groups serves the sidecar chain's anti-join AND
@@ -310,7 +293,7 @@ def _remove_locked(spark: SparkSession, cfg: PipelineConfig,
             (remap_delta.withColumn("gen", F.lit(new_gen)).repartition(1)
              .write.mode("overwrite").parquet(f"{staging}/{REP_REMAP}"))
 
-    sidecars_future = _spawn(_st_sidecars)
+    sidecars_future = pipe._spawn(_st_sidecars)
 
     # -- connectivity: CC over surviving group nodes ---------------------
     # (a dying group's edges vanish — only then can a cluster split; the
@@ -324,17 +307,11 @@ def _remove_locked(spark: SparkSession, cfg: PipelineConfig,
     edges = (e_sup.join(F.broadcast(sn_a), "a", "left_semi")
              .join(F.broadcast(sn_b), "b", "left_semi")
              .localCheckpoint())
-    pipe._record("rm_cc_edges", edges, t0, skipped=False)
-    n_edges = pipe.records[-1].rows_out
-    if n_edges <= cfg.add_cc_local_max_edges:
-        mapping = union_find([(r["a"], r["b"]) for r in edges.collect()])
-        roots_df = spark.createDataFrame(
-            sorted(mapping.items()), schema="rep_id string, root string")
-    else:
-        roots_df = (connected_components(edges)
-                    .select(F.col("image_id").alias("rep_id"),
-                            F.col("cluster_id").alias("root"))
-                    .localCheckpoint())
+    n_edges = pipe._record("rm_cc_edges", edges, t0, skipped=False,
+                           rows_in=n_mem)
+    roots_df = (components(edges, n_edges, cfg)
+                .select(F.col("image_id").alias("rep_id"),
+                        F.col("cluster_id").alias("root")))
     t0 = time.time()
     relab = (surv.select("image_id", "rep_id")
              .join(F.broadcast(roots_df), "rep_id", "left")
@@ -342,39 +319,13 @@ def _remove_locked(spark: SparkSession, cfg: PipelineConfig,
     norm = relab.groupBy("root").agg(F.min("image_id").alias("cluster_id"))
     delta = (relab.join(F.broadcast(norm), "root")
              .select("image_id", "cluster_id").localCheckpoint())
-    pipe._record("rm_clusters", delta, t0, skipped=False)
+    n_delta = pipe._record("rm_clusters", delta, t0, skipped=False,
+                           rows_in=n_edges)
 
     # -- stage the remaining deltas, then the shared manifest commit.
     #    Tombstones and the dead-group/remap sidecars have been staging
     #    on side threads since their inputs were cut; the clusters
     #    rewrite and id_index delta run CONCURRENTLY here (guide §2.6)
-    def _st_clusters():
-        t0 = time.time()
-        delta_buckets = {r[0] for r in
-                         delta.select(_pb("cluster_id").alias("pb"))
-                         .distinct().collect()}
-        touched = sorted(set(aff_buckets) | delta_buckets)
-        kept = (clusters_stored.filter(F.col("pbucket").isin(touched))
-                .join(F.broadcast(aff), "cluster_id", "left_anti")
-                .select("image_id", "cluster_id"))
-        (kept.unionByName(delta)
-         .withColumn("pbucket", _pb("cluster_id"))
-         .repartition(max(len(touched), 1), F.col("pbucket"))
-         .write.mode("overwrite").partitionBy("pbucket")
-         .parquet(f"{staging}/clusters"))
-        # explicit schema: a remove that kills every cluster in its
-        # touched buckets stages an EMPTY dir, which inference cannot
-        # read
-        staged_clusters = (spark.read
-                           .schema("image_id string, cluster_id string, "
-                                   "pbucket int")
-                           .parquet(f"{staging}/clusters"))
-        pipe._record("rm_clusters_rewrite", staged_clusters, t0,
-                     skipped=False)
-        present = {r[0] for r in staged_clusters.select("pbucket")
-                   .distinct().collect()}
-        return {str(p): bool(p in present) for p in touched}
-
     def _st_id():
         # id_index delta: survivors at their new label; removed ids at
         # a NULL label (the dead marker — membership/tombstone-ness
@@ -390,32 +341,16 @@ def _remove_locked(spark: SparkSession, cfg: PipelineConfig,
                                            null_s.alias("rep_id"))))
         stage_id_append(id_delta, new_gen, staging, cfg)
 
-    swap, _ = _run_parallel(_st_clusters, _st_id)
+    swap, _ = _run_parallel(
+        spark,
+        lambda: _stage_clusters_rewrite(pipe, clusters_stored, aff,
+                                        aff_buckets, delta, staging,
+                                        "rm_clusters_rewrite", n_delta),
+        _st_id)
     tomb_future.result()      # staged since the refusal checks passed
     sidecars_future.result()  # staged since surv was cut
-
-    manifest = {"version": 2, "staging": staging,
-                "append_stages": [DEAD_GROUPS, REP_REMAP],
-                "partitioned_appends": ["id_index", TOMBSTONES],
-                "id_index_gen": new_gen,
-                "clusters_swap": swap}
-    mpath = os.path.join(checkpoint_dir, ADD_MANIFEST)
-    pipe.fs.write_text(mpath, json.dumps(manifest))
-    _apply_add_commit(pipe.fs, checkpoint_dir, manifest)
-    pipe.fs.delete(mpath)
-
-    # post-commit housekeeping overlaps (same shape as the add path):
-    # staging wipe ∥ lineage flush ∥ file-status cache refresh
-    def _refresh():
-        for name in ("clusters", "id_index", TOMBSTONES, DEAD_GROUPS,
-                     REP_REMAP):
-            spark.catalog.refreshByPath(pipe._path(name))
-
-    _run_parallel(lambda: pipe.fs.delete(staging),
-                  pipe._flush_state,
-                  _refresh)
-    return (spark.read.parquet(pipe._path("clusters"))
-            .select("image_id", "cluster_id"))
+    return _commit_mutation(pipe, staging, [DEAD_GROUPS, REP_REMAP],
+                            ["id_index", TOMBSTONES], new_gen, swap)
 
 
 # ----------------------------------------------------------------- purge

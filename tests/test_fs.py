@@ -37,16 +37,27 @@ def test_local_fastpath_matches_jvm_backend(spark, monkeypatch):
     """The os-based local fast path and the Hadoop JVM path must agree
     on every observable: existence, rename refusal semantics (src
     missing / dst present -> False), move_children counts + _SUCCESS
-    skipping, create_atomic mutual exclusion, list_children contents."""
-    import os
+    skipping, create_atomic mutual exclusion, list_children contents
+    (hidden names skipped), mkdirs over an existing file."""
 
     def drive(fs, root):
         fs.mkdirs(f"{root}/src")
         fs.write_text(f"{root}/src/part-0", "a")
         fs.write_text(f"{root}/src/part-1", "b")
         fs.write_text(f"{root}/src/_SUCCESS", "")
+        # hidden names: a checksum sidecar (the JVM local listing hides
+        # it) and a plain dot-file (that listing shows it)
+        for name in (".part-9.crc", ".hidden"):
+            with open(f"{root}/src/{name}", "w") as f:
+                f.write("h")
         obs = []
         obs.append(fs.exists(f"{root}/src"))            # True
+        # mkdirs over an existing FILE: the Hadoop contract raises
+        # (FileAlreadyExistsException on the JVM side)
+        try:
+            obs.append(fs.mkdirs(f"{root}/src/part-0"))
+        except Exception:
+            obs.append("raised")
         # rename of a MISSING src: HDFS returns false, the Hadoop local
         # impl raises FileNotFoundException, the fast path returns
         # False — callers always exists()-guard (swap protocols), so

@@ -11,6 +11,7 @@ append path's manifest commit."""
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import shutil
 
@@ -157,31 +158,39 @@ def test_request_after_remove_remaps_and_excludes(spark, removal_build):
                                                            promoted)
 
 
-def test_remove_splits_cluster(spark):
+@pytest.mark.parametrize("cc_max_edges",
+                         [CFG.add_cc_local_max_edges, 0],
+                         ids=["driver_cc", "distributed_cc"])
+def test_remove_splits_cluster(spark, cc_max_edges):
     """Bridge removal: a--b near-dup (caption containment), b--c
     near-dup, a--c NOT a dup (incompatible captions) — all three share
     pixels so LSH proposes every pair, verify accepts only the chain.
     Removing b's whole group must SPLIT {a,b,c} into {a}, {c}, exactly
-    like a rebuild on the survivors."""
+    like a rebuild on the survivors.  e--a keeps one surviving edge, so
+    the remove's CC runs on both sides of its gate
+    (add_cc_local_max_edges=0 forces distributed star CC)."""
+    cfg = dataclasses.replace(CFG, add_cc_local_max_edges=cc_max_edges)
     px = _pixels(7)
     rows = [_row("s_a", px, "red cat"),
             _row("s_b", px, "red cat on mat"),
             _row("s_c", px, "on mat"),
-            _row("s_d", _pixels(8), "something else entirely")]
+            _row("s_d", _pixels(8), "something else entirely"),
+            _row("s_e", px, "red cat in hat")]
     images = spark.createDataFrame(rows, IMG_SCHEMA)
     ckpt = "/tmp/gsearch_spark_ckpt_split"
     shutil.rmtree(ckpt, ignore_errors=True)
-    before = _assign(NearDupPipeline(spark, CFG, ckpt)
+    before = _assign(NearDupPipeline(spark, cfg, ckpt)
                      .run(images, resume=False))
-    assert before["s_a"] == before["s_b"] == before["s_c"] == "s_a"
-    out = remove_images(spark, CFG, ckpt, spark.createDataFrame(
+    assert (before["s_a"] == before["s_b"] == before["s_c"]
+            == before["s_e"] == "s_a")
+    out = remove_images(spark, cfg, ckpt, spark.createDataFrame(
         [("s_b",)], "image_id string"))
     got = _assign(out)
     want = _rebuild(spark,
                     images.filter(F.col("image_id") != "s_b"),
                     "/tmp/gsearch_spark_ckpt_split_truth")
     assert got == want
-    assert got["s_a"] == "s_a" and got["s_c"] == "s_c"
+    assert got["s_a"] == got["s_e"] == "s_a" and got["s_c"] == "s_c"
     assert got["s_a"] != got["s_c"], "cluster did not split"
 
 

@@ -51,6 +51,28 @@ def test_resume_refuses_config_mismatch(spark, small_fixture_dir):
         NearDupPipeline(spark, other, CKPT).run(images, resume=True)
 
 
+def test_failed_stage_joins_side_chains(spark, small_fixture_dir,
+                                        monkeypatch):
+    """A stage that raises must not leave side chains running: run()
+    joins the ck_index / edge_index sidecar writes (started before the
+    clusters stage) before the error propagates, so a retry never races
+    a live sidecar overwrite."""
+    from gsearch_spark.operators import pipeline as pl
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected clusters-stage failure")
+
+    monkeypatch.setattr(pl, "expand_clusters", boom)
+    ckpt = f"{CKPT}_fail"
+    shutil.rmtree(ckpt, ignore_errors=True)
+    images = spark.read.parquet(f"{small_fixture_dir}/images.parquet")
+    with pytest.raises(RuntimeError, match="injected"):
+        NearDupPipeline(spark, CFG, ckpt).run(images, resume=False)
+    assert not spark.sparkContext.statusTracker().getActiveJobsIds()
+    for side in ("ck_index", "edge_index"):
+        assert os.path.exists(os.path.join(ckpt, side, "_SUCCESS")), side
+
+
 def _bomb_ids(n_base: int, seed: int, skew_fraction: float) -> "list[str]":
     plan = make_plan(n_base, seed=seed, skew_fraction=skew_fraction)
     return [f"img_{i:08d}" for i in range(plan.n_total)
